@@ -21,11 +21,11 @@ CMD uvicorn).
 
 from __future__ import annotations
 
-import csv
 import json
 from pathlib import Path
 from typing import Any, Mapping
 
+from .rules.loader import load_required_columns_csv, missing_required_columns
 from .rules.model import TableSpec, parse_spec
 
 __all__ = [
@@ -34,18 +34,6 @@ __all__ = [
     "create_app",
     "create_wsgi_app",
 ]
-
-
-def load_required_columns_csv(path: str | Path) -> dict[str, set[str]]:
-    """(table → required columns) from the reference-format CSV
-    (``table,column`` header; reference schema.py:44-52)."""
-    required: dict[str, set[str]] = {}
-    with open(path, newline="") as f:
-        for row in csv.DictReader(f):
-            required.setdefault(row["table"].strip().lower(), set()).add(
-                row["column"].strip().lower()
-            )
-    return required
 
 
 def _render_script(spec) -> str:
@@ -73,12 +61,10 @@ def translate_rule(
             + _render_script(spec),
             "warnings": [],
         }
-    warnings = []
-    if required_columns:
-        populated = {c.lower() for c in spec.column_order}
-        populated.add(spec.primary_key.name.lower())
-        for col in sorted(required_columns.get(spec.name.lower(), set()) - populated):
-            warnings.append(f"required column '{col}' of '{spec.name}' is not populated")
+    warnings = [
+        f"required column '{col}' of '{spec.name}' is not populated"
+        for col in sorted(missing_required_columns(spec, required_columns or {}))
+    ]
     return {"script": _render_script(spec), "warnings": warnings}
 
 

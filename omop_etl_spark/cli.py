@@ -1,14 +1,16 @@
 """Command-line interface.
 
-Three subcommands (reference ``omop_etl compile``/``execute``,
+Four subcommands (reference ``omop_etl compile``/``execute``,
 __main__.py:34-143 — whose ``execute`` was dead code calling methods
 that never existed; ours runs):
 
 * ``execute`` — load a rules dir, register parquet sources, run the
   full pipeline on Spark, write ``omop.*`` outputs as parquet.
-* ``translate`` — print the compiled artifacts for each table (per-
-  source mapping SQL + per-rule match SQL): the inspectable "script"
-  equivalent for a DataFrame-native engine.
+* ``translate`` — print each rules file's compiled Spark-SQL script
+  (``compile_table_script``): the mapping and column-phase selects
+  ``execute`` runs.
+* ``compile`` — write the whole rules set as ONE ordered Spark-SQL
+  script (the reference's ``etl.sql``), or one per rules file.
 * ``validate`` — parse rules, report required-column warnings (the
   reference web API's check, api.py:19-40).
 
@@ -77,30 +79,15 @@ def _cmd_execute(args) -> int:
 
 
 def _cmd_translate(args) -> int:
-    from .planner.compiler import TableCompiler
+    from .compile import compile_table_script
     from .rules.loader import load_rules_text
-    from .rules.model import ExpressionRule, TableSpec
 
     path = Path(args.rules)
-    texts = (
-        [(path.stem, path.read_text())]
-        if path.is_file()
-        else [(f.stem, f.read_text()) for f in sorted(path.glob("*.yaml"))]
-    )
-    for name, text in texts:
-        spec = load_rules_text(text, name=name)
-        if not isinstance(spec, TableSpec):
-            print(f"-- {name}: dependency file (scripts/temp tables only)")
-            continue
-        compiler = TableCompiler(spark=None, spec=spec)
-        print(f"-- table: {spec.name} (pk {spec.primary_key.name})")
-        for src_name, src in spec.primary_key.sources.items():
-            print(f"--   mapping source {src_name}:")
-            print(f"     {compiler.source_select_sql(src)}")
-        for rule in spec.columns:
-            if isinstance(rule, ExpressionRule):
-                print(f"--   column {rule.name} [{rule.primary_key}]:")
-                print(f"     {compiler.match_sql(rule)}")
+    files = [path] if path.is_file() else sorted(path.glob("*.yaml"))
+    for f in files:
+        spec = load_rules_text(f.read_text(), name=f.stem)
+        print(f"-- rules file: {f.name}")
+        print(compile_table_script(spec))
     return 0
 
 
@@ -167,28 +154,25 @@ def _cmd_compile(args) -> int:
 
 
 def _cmd_validate(args) -> int:
-    from .engine import Engine
-    from .rules.loader import load_rules_dir
+    from .rules.loader import (
+        load_required_columns_csv,
+        load_rules_dir,
+        missing_required_columns,
+    )
     from .rules.model import TableSpec
 
     specs = load_rules_dir(args.rules)
-    required: dict[str, set[str]] = {}
-    if args.required_columns:
-        import csv
-
-        with open(args.required_columns, newline="") as f:
-            for row in csv.DictReader(f):
-                required.setdefault(row["table"].strip().lower(), set()).add(
-                    row["column"].strip().lower()
-                )
+    required = (
+        load_required_columns_csv(args.required_columns)
+        if args.required_columns
+        else {}
+    )
     status = 0
     for spec in specs:
         if not isinstance(spec, TableSpec):
             print(f"{spec.name or '<anonymous>'}: dependency OK")
             continue
-        missing = required.get(spec.name.lower(), set()) - {
-            c.lower() for c in spec.column_order
-        } - {spec.primary_key.name.lower()}
+        missing = missing_required_columns(spec, required)
         if missing:
             status = 1
             print(f"{spec.name}: WARNING missing required columns: {sorted(missing)}")

@@ -6,8 +6,11 @@ The reference's primary deliverable is a single ``etl.sql`` written by
 audit. This module is that artifact re-expressed for Spark: every
 statement is plain Spark SQL; running them in order via ``spark.sql``
 against a catalog with the source tables registered reproduces
-``Engine.run``'s ``mapping.*`` and ``omop.*`` outputs exactly
-(tests/test_compile_artifact.py proves value parity on the fixtures).
+``Engine.run``'s ``mapping.*`` and ``omop.*`` outputs exactly. Parity
+holds by construction: the engine runs the very ``target_sql`` /
+key-union text of :class:`~.planner.compiler.TableCompiler` that this
+script writes out (tests/test_compile_artifact.py checks values and
+types on the fixtures and the registry specs).
 
 Statement ordering mirrors the engine (and reference __main__.py:56-88):
 every dependency and every table's initialization (scripts → pre_init
@@ -16,10 +19,10 @@ phase — the phase barrier that lets FK remaps read any other table's
 ``mapping.*``.
 
 Note on scale: the artifact's surrogate ids use the plain global
-``row_number()`` window (readable, runs anywhere); the engine's
-distributed range-exchange path (:mod:`.planner.surrogate`) remains the
-100 TB execution path. The artifact is for audit/interop, not the
-scheduler of record.
+``row_number()`` window (readable, runs anywhere) over the key union;
+the engine numbers the same union with the distributed range-exchange
+path (:mod:`.planner.surrogate`), which remains the 100 TB execution
+path. The artifact is for audit/interop, not the scheduler of record.
 """
 
 from __future__ import annotations

@@ -26,7 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .dialect import is_plpgsql_script, translate
 from .planner.compiler import MAPPING_SCHEMA, TARGET_SCHEMA, TableCompiler
-from .rules.loader import load_rules_dir, resolve_default_schemas, topo_sort
+from .rules.loader import (
+    load_required_columns_csv,
+    load_rules_dir,
+    missing_required_columns,
+    resolve_default_schemas,
+    topo_sort,
+)
 from .rules.model import DependencySpec, TableSpec
 
 __all__ = ["Engine"]
@@ -52,7 +58,6 @@ class Engine:
         strict_scripts: bool = True,
     ):
         self.spark = spark
-        self.temp_views: set[str] = set()
         self.required_columns: dict[str, set[str]] = {}
         # a failed setup script usually means later rules join against a
         # missing/empty lookup — fail fast like the reference's psql run
@@ -296,19 +301,13 @@ class Engine:
         not-null finalization filter — the live version of the
         reference's dead DELETE phase (schema.py:426-428, SURVEY §2.1
         #22)."""
-        import csv
-
-        with open(csv_path, newline="") as f:
-            for row in csv.DictReader(f):
-                self.required_columns.setdefault(
-                    row["table"].strip().lower(), set()
-                ).add(row["column"].strip().lower())
+        for table, cols in load_required_columns_csv(csv_path).items():
+            self.required_columns.setdefault(table, set()).update(cols)
 
     def missing_required_columns(self, spec: TableSpec) -> set[str]:
         """Required OMOP columns this spec never populates (the API's
         warning check, reference api.py:19-40)."""
-        required = self.required_columns.get(spec.name.lower(), set())
-        return required - {c.lower() for c in spec.column_order}
+        return missing_required_columns(spec, self.required_columns)
 
     # -- execution ----------------------------------------------------------
 
@@ -344,7 +343,6 @@ class Engine:
     def _run_temp_tables(self, defs) -> None:
         for t in defs:
             self.spark.sql(translate(t.query)).createOrReplaceTempView(t.alias)
-            self.temp_views.add(t.alias)
 
     def run_dependency(self, spec: DependencySpec) -> None:
         self._use(spec.default_schema)
@@ -357,7 +355,7 @@ class Engine:
         self._use(spec.default_schema)
         self._run_scripts(spec)
         self._run_temp_tables(spec.pre_init)
-        compiler = TableCompiler(self.spark, spec, self.temp_views)
+        compiler = TableCompiler(self.spark, spec)
         self._overwrite_table(compiler.build_mapping(), compiler.mapping_name)
         for frame in compiler.persisted:
             # the surrogate-id range frame has served its purpose once
@@ -370,7 +368,7 @@ class Engine:
     ) -> DataFrame:
         """Column phase → persist + return ``omop.<t>``."""
         self._use(spec.default_schema)
-        compiler = TableCompiler(self.spark, spec, self.temp_views)
+        compiler = TableCompiler(self.spark, spec)
         target = compiler.build_target()
         if apply_required_filter:
             for col in self.required_columns.get(spec.name.lower(), set()):

@@ -1,59 +1,65 @@
-"""Spark plan builder for one target table.
+"""Spark-SQL plan text for one target table.
 
-Compiles a :class:`~omop_etl_spark.rules.model.TableSpec` into lazy
-DataFrames following the reference's three-phase pipeline (reference
-schema.py:449-479, SURVEY §0) re-expressed Spark-first:
+Compiles a :class:`~omop_etl_spark.rules.model.TableSpec` into the SQL
+of the reference's three-phase pipeline (reference schema.py:449-479,
+SURVEY §0) re-expressed Spark-first. The same text serves both callers:
+``Engine.run`` hands it to ``spark.sql`` (:meth:`build_mapping`,
+:meth:`build_target`) and the ``compile`` artifact writes it out
+(:meth:`mapping_sql`, :meth:`target_sql`), so the engine and the
+artifact run one plan by construction.
 
 1. **Mapping phase** — per key source, scan→project natural keys→
-   filter, null-padded ``unionByName`` across sources, deterministic
-   surrogate ids (:mod:`.surrogate`). Materialized once as
-   ``mapping.<t>`` (the reference materializes it too; every column
-   rule and every other table's FK remap re-reads it).
-2. **Skeleton** — ``mapping.<t>.id`` is the seed of the target frame;
+   filter, null-padded ``UNION ALL`` across sources, deterministic
+   surrogate ids. Materialized once as ``mapping.<t>`` (the reference
+   materializes it too; every column rule and every other table's FK
+   remap re-reads it). The engine numbers the union with the
+   distributed :mod:`.surrogate` path; the artifact with the plain
+   ``row_number()`` window — the same ids.
+2. **Skeleton** — ``mapping.<t>.id`` is the seed of the target select;
    all other columns start NULL (reference schema.py:320-328).
 3. **Column phase** — instead of N sequential ``UPDATE … FROM``
    statements (reference generation.py:159-189), ONE wide select: rules
-   are grouped by join spec (FROM items + predicates) and each group
-   contributes a per-id ``matches`` frame (id, matched, value per rule)
-   from a single scan+join; the target column folds rules in file order
-   with ``when(matched_n, value_n).otherwise(…)``, so the LAST matching
-   rule wins — exactly the reference's sequential last-writer-wins
-   (schema.py:474-478) without mutating anything.
+   are grouped by join spec (FROM items + predicates) and each group is
+   a CTE ``__m<g>`` (``__gid<g>`` = target id, one ``__v<i>`` per rule)
+   from a single scan+join, left-joined to the seed; each target column
+   folds its rules in file order with nested ``CASE WHEN __m<g>.__gid<g>
+   IS NOT NULL``, so the LAST matching rule wins — exactly the
+   reference's sequential last-writer-wins (schema.py:474-478) without
+   mutating anything.
 
-Why SQL text for the match frames: rule expressions/constraints are
-opaque PostgreSQL SQL (after :mod:`omop_etl_spark.dialect` shims they
-are valid Spark SQL). Generating one declarative ``SELECT`` per rule
-and letting Catalyst classify the conjunctive predicates into join
-conditions vs pushed-down filters IS the Spark-first design: the
-comma-join + WHERE form compiles to Broadcast/SortMerge equi-joins,
-never a cartesian product (verified in tests/test_plans.py).
+Why SQL text: rule expressions/constraints are opaque PostgreSQL SQL
+(after :mod:`omop_etl_spark.dialect` shims they are valid Spark SQL).
+Generating one declarative ``SELECT`` and letting Catalyst classify the
+conjunctive predicates into join conditions vs pushed-down filters IS
+the Spark-first design: the comma-join + WHERE form compiles to
+Broadcast/SortMerge equi-joins, never a cartesian product (verified in
+tests/test_plan_quality.py::test_no_cartesian_or_rowwise_python_anywhere).
 
 Semantics shims the reference gets implicitly from Postgres
 (SURVEY §4.3/§4.5):
 
 * ``UPDATE … FROM`` applies at most one update per target row even when
-  the join multiplies matches → we ``groupBy(id).agg(min(value))``
-  (deterministic tiebreak; Postgres picks an arbitrary match).
+  the join multiplies matches → each match CTE is ``min()``-deduped per
+  target id (deterministic tiebreak; Postgres picks an arbitrary match).
 * FK remap (``references``) preserves prior values on unmatched rows →
-  the match frame is inner-joined to ``mapping.<ref>`` but folded via
-  the left-join + when(), so misses keep the previous rule's value.
+  the match CTE inner-joins ``mapping.<ref>`` but the fold's left join
+  + ``CASE`` keeps the previous rule's value on misses.
 * Constant rules hit ALL rows unconditionally, bypassing primary-key
   scoping (reference schema.py:110-125).
 
-Scale notes (100 TB): every match frame and the seed are keyed by the
+Scale notes (100 TB): every match CTE and the seed are keyed by the
 surrogate id, so the fold's left joins all shuffle on the same key and
 AQE reuses exchanges / broadcasts small match frames; the mapping frame
 is written once and scanned many times (columnar, key-only, small
 relative to facts). Single-partition windows never touch row-scale data
-(see :mod:`.surrogate`).
+on the engine path (see :mod:`.surrogate`).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..dialect import spark_type, translate
 from ..rules.model import (
@@ -61,7 +67,6 @@ from ..rules.model import (
     DisabledRule,
     ExpressionRule,
     InlineQuery,
-    PrimaryKeySource,
     TableRef,
     TableSpec,
 )
@@ -73,26 +78,13 @@ MAPPING_SCHEMA = "mapping"
 TARGET_SCHEMA = "omop"
 
 
-@dataclass
-class _RuleSlot:
-    """One enabled rule bound to its fold position."""
-
-    index: int
-    rule: ExpressionRule | ConstantRule
-
-
 class TableCompiler:
-    """Builds the mapping frame and the final wide select for one spec."""
+    """Renders, and on a session runs, the mapping and target selects
+    for one spec."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        spec: TableSpec,
-        temp_views: set[str] | None = None,
-    ):
+    def __init__(self, spark: SparkSession | None, spec: TableSpec):
         self.spark = spark
         self.spec = spec
-        self.temp_views = temp_views if temp_views is not None else set()
         #: frames persisted while building (surrogate-id range frames);
         #: the engine unpersists them once the mapping is materialized
         self.persisted: list[DataFrame] = []
@@ -124,77 +116,30 @@ class TableCompiler:
 
     # -- phase 1: mapping ---------------------------------------------------
 
-    def source_select_sql(self, src: PrimaryKeySource) -> str:
-        """``SELECT <keys aliased t_c> FROM <relation> WHERE <constraints>``
-        (reference schema.py:139-157)."""
-        ref = src.table_alias
-        cols = ", ".join(
-            f"CAST({ref}.{c} AS {spark_type(t)}) AS {ref}_{c}"
-            for c, t in src.columns.items()
-        )
-        sql = f"SELECT {cols} FROM {self._relation_sql(src.relation)}"
-        if src.constraints:
-            preds = " AND ".join(f"({translate(c)})" for c in src.constraints)
-            sql += f" WHERE {preds}"
-        return sql
-
-    def build_mapping(self) -> DataFrame:
-        """Null-padded union of per-source key frames + surrogate ids.
-
-        Ids are the global rank under (source index, natural keys) —
-        1-based, matching Postgres ``serial`` numbering across the
-        per-source INSERTs but deterministic (SURVEY §4.3).
-        """
-        pk = self.spec.primary_key
-        frames: list[DataFrame] = []
-        order_cols: list[str] = []
-        for i, src in enumerate(pk.sources.values()):
-            df = self.spark.sql(self.source_select_sql(src))
-            frames.append(df.withColumn("__src", F.lit(i)))
-            for c in src.columns:
-                name = f"{src.table_alias}_{c}"
-                if name not in order_cols:
-                    order_cols.append(name)
-
-        union = frames[0]
-        for f in frames[1:]:
-            union = union.unionByName(f, allowMissingColumns=True)
-
-        mapped = with_surrogate_id(
-            union, ["__src", *order_cols], id_col="id",
-            persist_registry=self.persisted,
-        )
-        return mapped.select("id", *order_cols)
-
-    def mapping_sql(self) -> str:
-        """The mapping phase as ONE executable Spark-SQL statement body
-        (the ``compile`` artifact twin of :meth:`build_mapping`).
-
-        Null-padded ``UNION ALL`` of per-source key selects plus a
-        global ``row_number() OVER (ORDER BY source index, natural
-        keys)`` — identical id values to the engine's distributed
-        surrogate path (:mod:`.surrogate`), expressed as the plain
-        window form an auditor can read and any Spark can run. The
-        single-partition window is acceptable for an audit artifact;
-        the engine path stays the scale path.
-        """
-        pk = self.spec.primary_key
-        # (column name, DDL type, owning source alias) in build_mapping order
-        all_cols: list[tuple[str, str, str]] = []
-        for src in pk.sources.values():
+    def _key_columns(self) -> list[tuple[str, str]]:
+        """``(<alias>_<column>, DDL type)`` of every natural-key column,
+        first declaration wins, in source order."""
+        cols: dict[str, str] = {}
+        for src in self.spec.primary_key.sources.values():
             for c, t in src.columns.items():
-                name = f"{src.table_alias}_{c}"
-                if not any(n == name for n, _, _ in all_cols):
-                    all_cols.append((name, spark_type(t), src.table_alias))
+                cols.setdefault(f"{src.table_alias}_{c}", spark_type(t))
+        return list(cols.items())
 
+    def key_union_sql(self) -> str:
+        """Null-padded ``UNION ALL`` of per-source key selects
+        (``SELECT <keys aliased t_c> FROM <relation> WHERE
+        <constraints>``, reference schema.py:139-157), each tagged with
+        its source index ``__src``."""
+        cols = self._key_columns()
         branches = []
-        for i, src in enumerate(pk.sources.values()):
+        for i, src in enumerate(self.spec.primary_key.sources.values()):
             ref = src.table_alias
-            own = {f"{ref}_{c}": c for c in src.columns}
+            own = {f"{ref}_{c}": (c, spark_type(t)) for c, t in src.columns.items()}
             exprs = [f"{i} AS __src"]
-            for name, typ, _ in all_cols:
+            for name, typ in cols:
                 if name in own:
-                    exprs.append(f"CAST({ref}.{own[name]} AS {typ}) AS {name}")
+                    c, t = own[name]
+                    exprs.append(f"CAST({ref}.{c} AS {t}) AS {name}")
                 else:
                     exprs.append(f"CAST(NULL AS {typ}) AS {name}")
             branch = (
@@ -205,13 +150,36 @@ class TableCompiler:
                 preds = " AND ".join(f"({translate(c)})" for c in src.constraints)
                 branch += f" WHERE {preds}"
             branches.append(branch)
+        return "\n  UNION ALL\n".join(branches)
 
-        names = [n for n, _, _ in all_cols]
+    def build_mapping(self) -> DataFrame:
+        """The key union numbered by the distributed surrogate path.
+
+        Ids are the global rank under (source index, natural keys) —
+        1-based, matching Postgres ``serial`` numbering across the
+        per-source INSERTs but deterministic (SURVEY §4.3).
+        """
+        names = [n for n, _ in self._key_columns()]
+        mapped = with_surrogate_id(
+            self.spark.sql(self.key_union_sql()), ["__src", *names],
+            id_col="id", persist_registry=self.persisted,
+        )
+        return mapped.select("id", *names)
+
+    def mapping_sql(self) -> str:
+        """The mapping phase as ONE executable Spark-SQL statement body
+        for the ``compile`` artifact: the key union under a global
+        ``row_number() OVER (ORDER BY source index, natural keys)`` —
+        identical ids to :meth:`build_mapping`, expressed as the plain
+        window form an auditor can read and any Spark can run. The
+        single-partition window is acceptable for an audit artifact;
+        the engine path stays the scale path.
+        """
+        names = [n for n, _ in self._key_columns()]
         order = ", ".join(["__src", *names])
-        union = "\n  UNION ALL\n".join(branches)
         return (
-            f"SELECT row_number() OVER (ORDER BY {order}) AS id, "
-            f"{', '.join(names)}\nFROM (\n{union}\n) __u"
+            f"SELECT CAST(row_number() OVER (ORDER BY {order}) AS BIGINT) AS id, "
+            f"{', '.join(names)}\nFROM (\n{self.key_union_sql()}\n) __u"
         )
 
     # -- phase 3: column rules ----------------------------------------------
@@ -221,7 +189,7 @@ class TableCompiler:
         ``<src>.<c> = mapping.<t>.<src>_<c>`` per natural-key column
         (reference schema.py:277-310). The target-side predicate
         (``omop.<t>.<pk> = mapping.<t>.id``) is structural in our plan:
-        the fold joins match frames back to the seed by id."""
+        the fold joins match CTEs back to the seed by id."""
         src = self.spec.primary_key.sources[pk_source_name]
         ref = self._relation_ref(src.relation)
         ta = src.table_alias
@@ -235,7 +203,7 @@ class TableCompiler:
         """``(from_items, predicates, value_expr)`` of a rule's match
         query. Rules whose ``(from_items, predicates)`` coincide share
         one join — only the projected value differs — which lets
-        :meth:`build_target` compile them into a single match frame.
+        :meth:`target_sql` compile them into a single match CTE.
         For ``references`` rules the remap equality involves the value
         expression, so it lives in the predicates and the projected
         value is the referenced mapping's surrogate id."""
@@ -260,117 +228,85 @@ class TableCompiler:
 
         return from_items, preds, value_expr
 
-    def match_sql(self, rule: ExpressionRule) -> str:
-        """The declarative match query for one expression rule."""
-        from_items, preds, value_expr = self.match_parts(rule)
-        return (
-            f"SELECT {self.mapping_name}.id AS __id, ({value_expr}) AS __v "
-            f"FROM {', '.join(from_items)} "
-            f"WHERE {' AND '.join(preds)}"
-        )
-
-    def group_match_frame(
-        self, members: list[tuple[_RuleSlot, str]],
-        from_items: list[str], preds: list[str],
-    ) -> DataFrame:
-        """Shared match frame for rules with one join spec: one scan +
-        join producing ``__id`` plus a ``__v<i>`` per rule, deduped to
-        one row per target id (the UPDATE…FROM one-update-per-row shim;
-        per-column ``min`` over the same match set equals the per-rule
-        dedup of separate frames)."""
-        sel = ", ".join(
-            f"({value}) AS __v{slot.index}" for slot, value in members
-        )
-        raw = self.spark.sql(
-            f"SELECT {self.mapping_name}.id AS __id, {sel} "
-            f"FROM {', '.join(from_items)} "
-            f"WHERE {' AND '.join(preds)}"
-        )
-        return raw.groupBy("__id").agg(
-            *[
-                F.min(f"__v{slot.index}").alias(f"__v{slot.index}")
-                for slot, _ in members
-            ]
-        )
-
-    def enabled_slots(self) -> list[_RuleSlot]:
-        return [
-            _RuleSlot(i, r)
-            for i, r in enumerate(self.spec.columns)
-            if not isinstance(r, DisabledRule)
-        ]
-
-    def _grouped_slots(self):
-        """Expression rules grouped by join spec + the per-slot group
-        id — the shared shape of :meth:`build_target` (DataFrame) and
-        :meth:`target_sql` (compile artifact)."""
-        slots = self.enabled_slots()
-        groups: dict[tuple[tuple[str, ...], tuple[str, ...]],
-                     tuple[list[str], list[str],
-                           list[tuple[_RuleSlot, str]]]] = {}
-        for slot in slots:
-            if isinstance(slot.rule, ConstantRule):
-                continue
-            from_items, preds, value = self.match_parts(slot.rule)
-            key = (tuple(from_items), tuple(preds))
-            if key not in groups:
-                groups[key] = (from_items, preds, [])
-            groups[key][2].append((slot, value))
-        return slots, groups
-
     @staticmethod
     def _constant_sql(rule: ConstantRule) -> str:
+        """The constant as a literal of its YAML value's own type: a
+        float is DOUBLE (a bare ``1.5`` would parse as DECIMAL), None is
+        NULL, dates and timestamps are typed literals, and strings
+        escape backslashes (Spark string literals process them)."""
         v = rule.constant
-        if isinstance(v, bool):
+        if v is None:
+            lit = "NULL"
+        elif isinstance(v, bool):
             lit = "true" if v else "false"
-        elif isinstance(v, (int, float)):
+        elif isinstance(v, int):
             lit = repr(v)
+        elif isinstance(v, float):
+            lit = f"CAST('{v!r}' AS DOUBLE)"
+        elif isinstance(v, datetime.datetime):
+            lit = f"TIMESTAMP '{v}'"
+        elif isinstance(v, datetime.date):
+            lit = f"DATE '{v}'"
         else:
-            lit = "'" + str(v).replace("'", "''") + "'"
+            lit = "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
         if rule.data_type:
             return f"CAST({lit} AS {spark_type(rule.data_type)})"
         return lit
 
     def target_sql(self) -> str:
-        """The column phase as ONE executable Spark-SQL statement body
-        (the ``compile`` artifact twin of :meth:`build_target`): a CTE
-        per distinct join spec (``min()``-deduped per target id — the
-        UPDATE…FROM one-update-per-row shim), left-joined to the
-        mapping seed, each column folded in file order with nested
-        ``CASE`` so the LAST matching rule wins."""
+        """The column phase as ONE executable Spark-SQL statement body:
+        a CTE per distinct join spec (``min()``-deduped per target id —
+        the UPDATE…FROM one-update-per-row shim; per-column ``min`` over
+        the same match set equals the per-rule dedup of separate
+        selects), left-joined to the mapping seed, each column folded in
+        file order with nested ``CASE`` so the LAST matching rule wins.
+        A table whose columns all copy from one source compiles to ONE
+        join."""
         pk_name = self.spec.primary_key.name
-        slots, groups = self._grouped_slots()
+        rules = [
+            (i, r) for i, r in enumerate(self.spec.columns)
+            if not isinstance(r, DisabledRule)
+        ]
+        groups: dict[tuple[tuple[str, ...], tuple[str, ...]],
+                     tuple[list[str], list[str], list[tuple[int, str]]]] = {}
+        for i, rule in rules:
+            if isinstance(rule, ExpressionRule):
+                from_items, preds, value = self.match_parts(rule)
+                key = (tuple(from_items), tuple(preds))
+                groups.setdefault(key, (from_items, preds, []))[2].append((i, value))
+
         ctes, joins = [], []
-        match_tab: dict[int, str] = {}
-        for gid, (from_items, preds, members) in enumerate(groups.values()):
-            sel = ", ".join(
-                f"min(({value})) AS __v{slot.index}" for slot, value in members
-            )
+        group_of: dict[int, int] = {}
+        for g, (from_items, preds, members) in enumerate(groups.values()):
+            sel = ", ".join(f"min(({value})) AS __v{i}" for i, value in members)
             ctes.append(
-                f"__m{gid} AS (\n  SELECT {self.mapping_name}.id AS __id, {sel}"
+                f"__m{g} AS (\n  SELECT {self.mapping_name}.id AS __gid{g}, {sel}"
                 f"\n  FROM {', '.join(from_items)}"
                 f"\n  WHERE {' AND '.join(preds)}"
                 f"\n  GROUP BY {self.mapping_name}.id\n)"
             )
             joins.append(
-                f"LEFT JOIN __m{gid} ON {self.mapping_name}.id = __m{gid}.__id"
+                f"LEFT JOIN __m{g} ON {self.mapping_name}.id = __m{g}.__gid{g}"
             )
-            for slot, _ in members:
-                match_tab[slot.index] = f"__m{gid}"
+            for i, _ in members:
+                group_of[i] = g
 
         out = [f"CAST({self.mapping_name}.id AS BIGINT) AS {pk_name}"]
         for col_name in self.spec.column_order:
             expr = "NULL"
-            for slot in slots:
-                if slot.rule.name != col_name:
+            for i, rule in rules:
+                if rule.name != col_name:
                     continue
-                if isinstance(slot.rule, ConstantRule):
-                    expr = self._constant_sql(slot.rule)
+                if isinstance(rule, ConstantRule):
+                    # constants apply to every row unconditionally
+                    expr = self._constant_sql(rule)
                 else:
-                    mt = match_tab[slot.index]
+                    # a matching rule writes its value even when NULL
+                    # (UPDATE SET col = expr semantics)
+                    g = group_of[i]
                     expr = (
-                        f"CASE WHEN {mt}.__id IS NOT NULL "
-                        f"THEN {mt}.__v{slot.index} ELSE {expr} END"
+                        f"CASE WHEN __m{g}.__gid{g} IS NOT NULL "
+                        f"THEN __m{g}.__v{i} ELSE {expr} END"
                     )
             out.append(f"({expr}) AS {col_name}")
 
@@ -383,54 +319,5 @@ class TableCompiler:
         return body
 
     def build_target(self) -> DataFrame:
-        """Phase 2+3: seed ids, join every rule's match frame, fold each
-        column's rules in file order (last writer wins)."""
-        pk_name = self.spec.primary_key.name
-        seed = self.spark.table(self.mapping_name).select(
-            F.col("id").alias("__rowid")
-        )
-
-        # group expression rules by join spec: one scan+join+dedup per
-        # distinct (FROM items, predicates), not per rule — a table
-        # whose columns all copy from one source compiles to ONE join
-        slots, groups = self._grouped_slots()
-        match_col: dict[int, str] = {}
-
-        cur = seed
-        for gid, (from_items, preds, members) in enumerate(groups.values()):
-            mcol = f"__mg{gid}"
-            m = self.group_match_frame(members, from_items, preds)
-            m = m.select(
-                F.col("__id").alias(f"__gid{gid}"),
-                F.lit(True).alias(mcol),
-                *[f"__v{slot.index}" for slot, _ in members],
-            )
-            for slot, _ in members:
-                match_col[slot.index] = mcol
-            cur = cur.join(
-                m, cur["__rowid"] == m[f"__gid{gid}"], "left"
-            ).drop(f"__gid{gid}")
-
-        out_cols = [F.col("__rowid").cast("bigint").alias(pk_name)]
-        for col_name in self.spec.column_order:
-            value = F.lit(None)
-            for slot in slots:
-                if slot.rule.name != col_name:
-                    continue
-                if isinstance(slot.rule, ConstantRule):
-                    val = F.lit(slot.rule.constant)
-                    if slot.rule.data_type:
-                        val = val.cast(spark_type(slot.rule.data_type).lower())
-                    # constants apply to every row unconditionally
-                    value = val
-                else:
-                    # a matching rule writes its value even when NULL
-                    # (UPDATE SET col = expr semantics); members share
-                    # the group's predicates, so group-match ⇔ rule-match
-                    value = F.when(
-                        F.col(match_col[slot.index]),
-                        F.col(f"__v{slot.index}"),
-                    ).otherwise(value)
-            out_cols.append(value.alias(col_name))
-
-        return cur.select(*out_cols)
+        """Phase 2+3 on the session: :meth:`target_sql` as a frame."""
+        return self.spark.sql(self.target_sql())

@@ -11,16 +11,19 @@ table's pre-requisite temp views exist before it compiles
 
 from __future__ import annotations
 
+import csv
 from pathlib import Path
-from typing import Iterable
+from typing import Iterable, Mapping
 
 import yaml
 
 from .model import DependencySpec, RuleError, TableSpec, parse_spec
 
 __all__ = [
+    "load_required_columns_csv",
     "load_rules_dir",
     "load_rules_text",
+    "missing_required_columns",
     "resolve_default_schemas",
     "topo_sort",
 ]
@@ -41,6 +44,29 @@ def load_rules_dir(path: str | Path) -> list[TableSpec | DependencySpec]:
         spec = load_rules_text(f.read_text(), name=f.stem)
         specs.append(spec)
     return topo_sort(specs)
+
+
+def load_required_columns_csv(path: str | Path) -> dict[str, set[str]]:
+    """(table → required columns) from the reference-format CSV
+    (``table,column`` header; reference schema.py:44-52), lower-cased."""
+    required: dict[str, set[str]] = {}
+    with open(path, newline="") as f:
+        for row in csv.DictReader(f):
+            required.setdefault(row["table"].strip().lower(), set()).add(
+                row["column"].strip().lower()
+            )
+    return required
+
+
+def missing_required_columns(
+    spec: TableSpec, required: Mapping[str, set[str]]
+) -> set[str]:
+    """Required columns of ``spec``'s table that no rule populates (the
+    reference web API's warning check, api.py:19-40). The surrogate pk
+    is always populated by the skeleton phase, so it is never missing."""
+    populated = {c.lower() for c in spec.column_order}
+    populated.add(spec.primary_key.name.lower())
+    return required.get(spec.name.lower(), set()) - populated
 
 
 def _spec_key(spec: TableSpec | DependencySpec) -> str | None:

@@ -177,7 +177,6 @@ class ExpressionRule:
     primary_key: str
     constraints: Sequence[str] = ()
     references: ForeignKeyRef | None = None
-    enabled: bool = True
 
 
 @dataclass(frozen=True)
@@ -194,7 +193,6 @@ class ConstantRule:
     name: str
     constant: object
     data_type: str | None = None
-    enabled: bool = True
 
 
 @dataclass(frozen=True)

@@ -117,3 +117,24 @@ def test_fastapi_app_round_trip_when_available():
     resp = client.post("/api/translate", json=yaml.safe_load(RULE))
     assert resp.status_code == 200
     assert "CREATE TABLE omop.person_copy" in resp.json()["script"]
+
+
+def test_engine_missing_required_columns_skips_pk(engine, tmp_path):
+    """The surrogate pk is populated by the skeleton phase: naming it in
+    the required-columns CSV never reports it missing, on the engine as
+    in the API and the ``validate`` CLI."""
+    from omop_etl_spark import load_rules_text
+    from omop_etl_spark.cli import main
+
+    csv_path = tmp_path / "required.csv"
+    csv_path.write_text(
+        "table,column\nperson_copy,person_id\nperson_copy,full_name\n"
+        "person_copy,birth_year\n"
+    )
+    engine.load_required_columns(csv_path)
+    assert engine.missing_required_columns(load_rules_text(RULE)) == {"birth_year"}
+
+    rules = tmp_path / "rules"
+    rules.mkdir()
+    (rules / "person_copy.yaml").write_text(RULE)
+    assert main(["validate", "--rules", str(rules), "--required-columns", str(csv_path)]) == 1

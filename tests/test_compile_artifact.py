@@ -16,19 +16,25 @@ from test_etl_fixtures import (
 )
 
 
-def _parity(engine, spark, yaml_texts, table, order):
+def _parity(engine, spark, yaml_texts, tables):
+    """Run the rules through ``Engine.run`` and through the compiled
+    script; every named ``omop`` table must come out with the same
+    column types and the same rows."""
     specs = [load_rules_text(y) for y in yaml_texts]
-    expected = rows(engine.run(specs)[table], *order)
+    out = engine.run(specs)
+    expected = {t: (out[t].dtypes, rows(out[t], *out[t].columns)) for t in tables}
     script = compile_script(specs, drop_tables=False)
     run_script(spark, script)
-    got = rows(spark.table(f"omop.{table}"), *order)
-    assert got == expected
+    for t, (dtypes, want) in expected.items():
+        got = spark.table(f"omop.{t}")
+        assert got.dtypes == dtypes, t
+        assert rows(got, *got.columns) == want, t
     return script
 
 
 def test_copy_parity(engine, spark):
     seed_cerner(engine, spark)
-    script = _parity(engine, spark, [COPY_RULES], "baz", ["id"])
+    script = _parity(engine, spark, [COPY_RULES], ["baz"])
     # golden row check straight from the artifact run
     assert rows(spark.table("omop.baz"), "id") == [
         (1, "a", 8),
@@ -47,12 +53,63 @@ def test_copy_parity(engine, spark):
 
 def test_merge_multisource_parity(engine, spark):
     seed_cerner(engine, spark)
-    _parity(engine, spark, [MERGE_RULES], "baz", ["id"])
+    _parity(engine, spark, [MERGE_RULES], ["baz"])
 
 
 def test_constant_parity(engine, spark):
     seed_cerner(engine, spark)
-    _parity(engine, spark, [CONSTANT_RULES], "baz", ["id"])
+    _parity(engine, spark, [CONSTANT_RULES], ["baz"])
+
+
+UNTYPED_CONSTANT_RULES = r"""
+name: baz
+primary_key:
+  name: id
+  sources:
+    foo:
+      table: foo
+      columns:
+        id: integer
+columns:
+  - name: ratio
+    constant: 1.5
+  - name: nothing
+    constant: null
+  - name: day
+    constant: 2020-01-02
+  - name: moment
+    constant: 2020-01-02 03:04:05
+  - name: quoted
+    constant: O'Brien C:\temp
+"""
+
+
+def test_untyped_constant_types_parity(engine, spark):
+    """Constants without ``data_type`` keep the type of their YAML value
+    on both paths: a float is DOUBLE (not DECIMAL), null stays NULL
+    (not the string 'None'), YAML dates and timestamps are typed, and
+    quotes and backslashes in strings survive the SQL literal."""
+    import datetime
+
+    seed_cerner(engine, spark)
+    _parity(engine, spark, [UNTYPED_CONSTANT_RULES], ["baz"])
+    out = spark.table("omop.baz")
+    assert out.dtypes == [
+        ("id", "bigint"),
+        ("ratio", "double"),
+        ("nothing", "void"),
+        ("day", "date"),
+        ("moment", "timestamp"),
+        ("quoted", "string"),
+    ]
+    assert rows(out, "id")[0] == (
+        1,
+        1.5,
+        None,
+        datetime.date(2020, 1, 2),
+        datetime.datetime(2020, 1, 2, 3, 4, 5),
+        "O'Brien C:\\temp",
+    )
 
 
 def test_fk_remap_parity(engine, spark):
@@ -80,13 +137,38 @@ def test_fk_remap_parity(engine, spark):
             "id bigint, staff_id int, patient_id int",
         ),
     )
-    _parity(engine, spark, [EVENT_RULES], "events", ["id"])
+    _parity(engine, spark, [EVENT_RULES], ["events"])
     assert rows(spark.table("omop.events"), "id") == [
         (1, 1, 4),
         (2, 2, 4),
         (3, 0, 3),
         (4, None, 6),
     ]
+
+
+def test_registry_etl_specs_parity(engine, spark):
+    """The nine registry ETL specs over the sf0.001 tier: the compiled
+    script reproduces ``Engine.run``'s types and rows for every table."""
+    from pathlib import Path
+
+    import __spark_entry__ as entry
+    # the sf0.001 tier of the shared test data
+    from test_incremental_replay import DOCS
+
+    texts = [
+        entry.ETL_COPY,
+        entry.ETL_MERGE,
+        entry.ETL_FK_PERSON,
+        entry.ETL_FK_ORDERS,
+        entry.ETL_LWW,
+        entry.ETL_CONSTANT,
+        entry.ETL_QUERY_TABLE,
+        entry.ETL_TEMP_TABLE,
+        entry.ETL_REQUIRED,
+    ]
+    for t in ("customer", "supplier", "nation", "region", "part", "orders", "lineitem"):
+        engine.register_parquet(f"cerner.{t}", Path(DOCS).parent / f"{t}.parquet")
+    _parity(engine, spark, texts, [load_rules_text(y).name for y in texts])
 
 
 def test_drop_tables_flag(engine, spark):
@@ -107,6 +189,20 @@ def test_cli_compile_writes_artifact(tmp_path):
     assert main(["compile", "--rules", str(rules), "--output", str(out)]) == 0
     text = out.read_text()
     assert "CREATE TABLE omop.baz" in text and "row_number() OVER" in text
+
+
+def test_cli_translate_prints_compiled_table_script(tmp_path, capsys):
+    """``translate`` prints each rules file's compiled script: the
+    mapping and column-phase statements the engine runs."""
+    from omop_etl_spark.cli import main
+
+    rules = tmp_path / "rules"
+    rules.mkdir()
+    (rules / "baz.yaml").write_text(COPY_RULES)
+    assert main(["translate", "--rules", str(rules)]) == 0
+    text = capsys.readouterr().out
+    assert "CREATE TABLE mapping.baz" in text
+    assert "CREATE TABLE omop.baz" in text
 
 
 def test_cli_no_one_file_per_table_artifacts(tmp_path):
